@@ -156,8 +156,6 @@ _INSERT_LAKE_RE = _re.compile(
     _re.IGNORECASE | _re.DOTALL,
 )
 
-#: `MERGE INTO <attached delta table> …` — copy-on-write upsert
-#: through the native protocol writer (sources/delta_write.merge_delta).
 #: `INSERT INTO t … ON CONFLICT (keys) DO NOTHING|DO UPDATE SET …` plus
 #: the `INSERT OR REPLACE|IGNORE` shorthands — upsert statements routed
 #: onto the native MERGE writer (attached delta tables), loud otherwise.
@@ -174,7 +172,10 @@ _INSERT_CONFLICT_RE = _re.compile(
     _re.IGNORECASE | _re.DOTALL,
 )
 
-
+#: `MERGE INTO <attached delta/iceberg table> …` — upsert through the
+#: native protocol writers: Delta copy-on-write
+#: (sources/delta_write.merge_delta), Iceberg merge-on-read
+#: (sources/iceberg_write.merge_iceberg).
 _MERGE_LAKE_RE = _re.compile(
     r"^MERGE\s+INTO\s+(?P<name>[A-Za-z_]\w*)"
     r"(?:\s+AS)?(?:\s+(?P<talias>(?!USING\b)[A-Za-z_]\w*))?\s+"
@@ -183,8 +184,8 @@ _MERGE_LAKE_RE = _re.compile(
 )
 
 #: `UPDATE <tbl> SET …` / `DELETE FROM <tbl> …` — routed to the native
-#: Delta copy-on-write writer for attached delta tables, loud
-#: UnsupportedDialect otherwise (the reference FDW is read-only; its
+#: writers for attached delta/iceberg tables, loud UnsupportedDialect
+#: otherwise (the reference FDW is read-only; its
 #: README roadmap lists UPDATE as unimplemented — additive scope).
 _UPDATE_STMT_RE = _re.compile(
     r"^UPDATE\s+(?P<name>[A-Za-z_][\w.]*)\s+SET\s+(?P<rest>.+?);?\s*$",
@@ -483,7 +484,9 @@ class Engine:
             if name not in self._macros and not m.group("ifex"):
                 raise EngineError(f"macro {name!r} does not exist")
             self._macros.pop(name, None)
-            return self.spark.createDataFrame([(name,)], "dropped string")
+            return _types.local_relation(
+                self.spark, [(name,)], "dropped string"
+            )
         if self._macros:
             query = self._expand_macros(query)
         q_strip = query.strip()
@@ -630,7 +633,7 @@ class Engine:
                     "json" if p.endswith((".json", ".ndjson")) else "parquet"
                 )
             n = self.copy_to(m.group("q"), m.group("path"), format=fmt)
-            return self.spark.createDataFrame([(n,)], "count bigint")
+            return _types.local_relation(self.spark, [(n,)], "count bigint")
         m = _CTAS_LAKE_RE.match(query.strip())
         if m:
             # CREATE TABLE … USING delta|iceberg LOCATION '…' AS SELECT …
@@ -1215,16 +1218,25 @@ class Engine:
                             "num_row_groups": meta.metadata.num_row_groups,
                         }
                     )
-        return self.spark.createDataFrame(rows)
+        return _types.local_relation(
+            self.spark,
+            rows,
+            "converted_type string, file_name string, logical_type string, "
+            "max_definition_level bigint, max_repetition_level bigint, "
+            "name string, num_row_groups bigint, num_rows bigint, "
+            "type string",
+        )
 
     def parquet_describe(self, files: str | list[str]) -> DataFrame:
         """Logical describe (api/parquet.rs:113-190): column_name/column_type."""
         df = load_source(self.spark, files, "parquet", {})
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
-                {"column_name": f.name, "column_type": f.dataType.simpleString()}
+                (f.name, f.dataType.simpleString())
                 for f in df.schema.fields
-            ]
+            ],
+            "column_name string, column_type string",
         )
 
     def sniff_csv(self, files: str | list[str], sample_size: int = 20480) -> dict:
@@ -1285,8 +1297,12 @@ class Engine:
                 loaded = bool(probe())
             except Exception:
                 loaded = False
-            rows.append({"extension_name": name, "loaded": loaded, "description": desc})
-        return self.spark.createDataFrame(rows)
+            rows.append((desc, name, loaded))
+        return _types.local_relation(
+            self.spark,
+            rows,
+            "description string, extension_name string, loaded boolean",
+        )
 
     # ------------------------------------------------------------------ #
     # Credentials (S7 — src/duckdb/secret.rs)
@@ -1409,7 +1425,8 @@ class Engine:
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
         )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(int(res.get("rows", 0)),)], "count bigint"
         )
 
@@ -1473,7 +1490,8 @@ class Engine:
         through to the other statement forms)."""
         m = _CREATE_EXTENSION_RE.match(q)
         if m:
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(m.group("name"),)], "extension string"
             )
         m = _CREATE_FDW_RE.match(q)
@@ -1487,7 +1505,7 @@ class Engine:
                     "conventionally named <format>_wrapper)"
                 )
             self._wrappers[w] = self._WRAPPER_FORMATS[stem]
-            return self.spark.createDataFrame([(w,)], "wrapper string")
+            return _types.local_relation(self.spark, [(w,)], "wrapper string")
         m = _CREATE_SERVER_RE.match(q)
         if m:
             w = m.group("w").lower()
@@ -1505,7 +1523,8 @@ class Engine:
                 fmt,
                 self._parse_ddl_options(m.group("opts")),
             )
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(m.group("s"), fmt)], "server string, format string"
             )
         m = _CREATE_USER_MAPPING_RE.match(q)
@@ -1521,7 +1540,8 @@ class Engine:
                 # into DuckDB secrets with (secret.rs) → secret store
                 stype = str(opts.pop("type", "s3")).lower()
                 self.add_secret(stype, {k: str(v) for k, v in opts.items()})
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(srv, len(opts))], "server string, n_options int"
             )
         m = _CREATE_FOREIGN_TABLE_RE.match(q)
@@ -1547,7 +1567,8 @@ class Engine:
             self.attach(
                 name, files, fmt, opts or None, columns or None
             )
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(name, fmt, len(files))],
                 "table string, format string, n_files int",
             )
@@ -1560,7 +1581,9 @@ class Engine:
                 raise EngineError(
                     f"DROP FOREIGN TABLE: {name!r} is not attached"
                 )
-            return self.spark.createDataFrame([(name,)], "dropped string")
+            return _types.local_relation(
+                self.spark, [(name,)], "dropped string"
+            )
         return None
 
     @staticmethod
@@ -1627,7 +1650,7 @@ class Engine:
         snap = self.sql(m.group("q")).localCheckpoint(eager=True)
         snap.createOrReplaceTempView(name)
         self._temp_tables[name.lower()] = snap
-        return self.spark.createDataFrame([(name,)], "created string")
+        return _types.local_relation(self.spark, [(name,)], "created string")
 
     def _drop_table_statement(self, m) -> DataFrame:
         """``DROP TABLE [IF EXISTS] t`` for engine temp tables (only
@@ -1637,7 +1660,8 @@ class Engine:
         if name in self._temp_tables:
             self._temp_tables.pop(name)
             self.spark.catalog.dropTempView(m.group("name"))
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(m.group("name"),)], "dropped string"
             )
         # only attachments can reach here — refuse rather than guess
@@ -1820,7 +1844,8 @@ class Engine:
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
         )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(res["rows_written"]),
@@ -1904,12 +1929,15 @@ class Engine:
         return set_map
 
     def _merge_lake_statement(self, m) -> DataFrame:
-        """``MERGE INTO <attached delta table> [AS] t USING <rel> [AS] s
-        ON <cond> WHEN [NOT] MATCHED [AND c] THEN UPDATE SET …/DELETE/
-        INSERT */(cols) VALUES (…)`` — copy-on-write upsert through the
-        native writer (sources/delta_write.merge_delta: one inner join
-        finds touched files, only those rewrite, inserts anti-join;
-        first matching clause wins, ambiguous multi-match errors).
+        """``MERGE INTO <attached delta|iceberg table> [AS] t USING <rel>
+        [AS] s ON <cond> WHEN [NOT] MATCHED [AND c] THEN UPDATE SET …/
+        DELETE/INSERT */(cols) VALUES (…)`` — upsert through the native
+        writers.  Delta: copy-on-write (sources/delta_write.merge_delta:
+        one inner join finds touched files, only those rewrite, inserts
+        anti-join).  Iceberg: merge-on-read
+        (sources/iceberg_write.merge_iceberg: matched rows become
+        position deletes).  Both: first matching clause wins, ambiguous
+        multi-match errors.
         Returns a one-row metrics relation and refreshes the
         attachment onto the new snapshot."""
         from pg_analytics_spark.dialect import (
@@ -2106,7 +2134,8 @@ class Engine:
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
         )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(res["rows_written"]),
@@ -2148,12 +2177,14 @@ class Engine:
         return att
 
     def _update_lake_statement(self, m) -> DataFrame:
-        """``UPDATE <attached delta table> SET col = expr[, …]
-        [WHERE cond]`` — copy-on-write through the native writer
-        (sources/delta_write.update_delta): one per-file aggregate
-        finds touched files, only those rewrite, NULL-predicate rows
-        keep their old values (SQL three-valued logic).  Returns a
-        one-row metrics relation and refreshes the attachment."""
+        """``UPDATE <attached delta|iceberg table> SET col = expr[, …]
+        [WHERE cond]`` — NULL-predicate rows keep their old values (SQL
+        three-valued logic) on both writers.  Delta: copy-on-write
+        (sources/delta_write.update_delta: one per-file aggregate finds
+        touched files, only those rewrite).  Iceberg: merge-on-read
+        (sources/iceberg_write.update_iceberg: position deletes plus
+        the updated images as new data files).  Returns a one-row
+        metrics relation and refreshes the attachment."""
         from pg_analytics_spark.dialect import _depths, _tokenize
         from pg_analytics_spark.sources.delta_write import update_delta
 
@@ -2211,7 +2242,8 @@ class Engine:
             self.attach(
                 att.name, att.files, att.format, att.options, att.columns
             )
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(int(res["rows_updated"]), int(res["version"]))],
                 "rows_updated bigint, version int",
             )
@@ -2241,7 +2273,8 @@ class Engine:
             self.attach(
                 att.name, att.files, att.format, att.options, att.columns
             )
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(int(res["rows_deleted"]), int(res["version"]))],
                 "rows_deleted bigint, version int",
             )
@@ -2265,7 +2298,8 @@ class Engine:
             if not arg:
                 raise UnsupportedDialect("PRAGMA table_info needs a table name")
             schema = self.spark.table(arg).schema
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [
                     (
                         i,
@@ -2281,12 +2315,14 @@ class Engine:
                 "dflt_value string, pk boolean",
             )
         if name == "version":
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(f"pg_analytics_spark (Spark {self.spark.version})", "")],
                 "library_version string, source_id string",
             )
         if name == "database_list":
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(0, "memory", "")], "seq int, name string, file string"
             )
         if name == "show_tables":
@@ -2452,10 +2488,8 @@ class Engine:
 
                         pat = args.strip("'\"")
                         rows = [(f,) for f in sorted(_glob.glob(pat))]
-                        df = self.spark.createDataFrame(
-                            rows, "file string"
-                        ) if rows else self.spark.createDataFrame(
-                            [], "file string"
+                        df = _types.local_relation(
+                            self.spark, rows, "file string"
                         )
                         # per-expansion monotonic id — hash-derived
                         # names can collide across distinct patterns
@@ -2475,7 +2509,8 @@ class Engine:
                             )
                             for a in self._attachments.values()
                         ]
-                        df = self.spark.createDataFrame(
+                        df = _types.local_relation(
+                            self.spark,
                             rows,
                             "database_name string, schema_name string, "
                             "table_name string, temporary boolean, "
@@ -2823,7 +2858,8 @@ class Engine:
         att = self._dml_delta_attachment(m.group("name"), "VACUUM")
         hours = float(m.group("hours")) if m.group("hours") else 168.0
         res = vacuum_delta(att.files[0], retention_hours=hours)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(int(res["files_deleted"]), int(res["bytes_deleted"]))],
             "files_deleted bigint, bytes_deleted bigint",
         )
@@ -2946,7 +2982,8 @@ class Engine:
                     )
                 )
         rows.sort(key=lambda r: -r[0] if att.format == "delta" else -r[1])
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     v,
@@ -2982,7 +3019,8 @@ class Engine:
             if ms is not None
             else None
         )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     d["format"],
@@ -3033,7 +3071,8 @@ class Engine:
                 snapshot_id=int(sid) if sid else None,
                 **kw,
             )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(r["name"], r["type"], int(r["snapshot_id"]), int(r["version"]))],
             "name string, type string, snapshot_id bigint, version bigint",
         )
@@ -3062,7 +3101,8 @@ class Engine:
             r = alter_delta_constraints(
                 att.files[0], drop=m.group("drop_name")
             )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(r["operation"], r["name"], int(r["version"]))],
             "operation string, name string, version bigint",
         )
@@ -3085,7 +3125,8 @@ class Engine:
         r = convert_parquet_to_delta(
             self.spark, m.group("path").strip(), partition_by=decls
         )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(int(r["files"]), int(r["rows"]), int(r["version"]))],
             "files bigint, rows bigint, version bigint",
         )
@@ -3107,7 +3148,8 @@ class Engine:
             )
 
             r = rewrite_manifests_iceberg(path)
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [
                     (
                         int(r["manifests_before"]),
@@ -3125,7 +3167,8 @@ class Engine:
 
             hours = float(m.group("arg")) if m.group("arg") else 72.0
             r = remove_orphan_files_iceberg(path, older_than_hours=hours)
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [
                     (
                         int(r["files_deleted"]),
@@ -3143,7 +3186,8 @@ class Engine:
         keep = int(m.group("arg")) if m.group("arg") else 1
         r = expire_iceberg_snapshots(self.spark, path, retain_last=keep)
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(r["snapshots_expired"]),
@@ -3171,7 +3215,8 @@ class Engine:
             int(version) if version is not None else None,
         )
         self.attach(m.group("target"), [m.group("location")], "delta")
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(res["source_version"]),
@@ -3194,7 +3239,8 @@ class Engine:
             schema = self.sql(body).schema
         else:
             schema = self.spark.table(body).schema
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     f.name,
@@ -3231,7 +3277,8 @@ class Engine:
             self.attach(
                 att.name, att.files, att.format, att.options, att.columns
             )
-            return self.spark.createDataFrame(
+            return _types.local_relation(
+                self.spark,
                 [(int(res_i["rolled_back_to"]), int(res_i["version"]))],
                 "rolled_back_to bigint, version int",
             )
@@ -3241,7 +3288,8 @@ class Engine:
             self.spark, att.files[0], int(m.group("version"))
         )
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(res["restored_to"]),
@@ -3281,9 +3329,9 @@ class Engine:
             )
             props = dict((meta_d or {}).get("configuration") or {})
         rows = sorted((str(k), str(v)) for k, v in props.items())
-        if not rows:
-            return self.spark.createDataFrame([], "key string, value string")
-        return self.spark.createDataFrame(rows, "key string, value string")
+        return _types.local_relation(
+            self.spark, rows, "key string, value string"
+        )
 
     def _alter_props_statement(self, m) -> DataFrame:
         """``ALTER TABLE t SET TBLPROPERTIES ('k'='v', …)`` / ``UNSET
@@ -3341,7 +3389,8 @@ class Engine:
                 unset_props or None,
             )
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(m.group("verb").upper(), int(res["version"]))],
             "operation string, version int",
         )
@@ -3368,7 +3417,8 @@ class Engine:
         ] if body else []
         res = alter_iceberg_partition(att.files[0], parts)
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(int(res["spec_id"]), int(res["version"]))],
             "spec_id int, version int",
         )
@@ -3403,7 +3453,8 @@ class Engine:
 
             res = alter_delta(att.files[0], **kw)
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(str(res["operation"]), int(res["version"]))],
             "operation string, version int",
         )
@@ -3425,7 +3476,8 @@ class Engine:
             self.spark, att.files[0], zorder_by=cols or None
         )
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(res["files_before"]),
@@ -3475,7 +3527,8 @@ class Engine:
         return iceberg_statistics(self.spark, att.files[0])
 
     def _dml_metrics(self, res: dict) -> DataFrame:
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [
                 (
                     int(res["rows_written"]),
@@ -3523,7 +3576,8 @@ class Engine:
         self._macros[name] = (
             params, m.group("body").strip(), bool(m.group("table"))
         )
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             [(name, len(params))], "macro string, n_params int"
         )
 
@@ -3703,7 +3757,8 @@ class Engine:
                     break
             bucket = b.split("/", 1)[0] or None
         applied = self.add_secret(secret_type, opts, bucket=bucket)
-        return self.spark.createDataFrame(
+        return _types.local_relation(
+            self.spark,
             sorted(applied.items()), "key string, value string"
         )
 
@@ -4058,7 +4113,8 @@ def _summarize(spark: SparkSession, df: DataFrame) -> DataFrame:
                 round(100.0 * row[f"{c}!nulls"] / total, 2) if total else 0.0,
             )
         )
-    return spark.createDataFrame(
+    return _types.local_relation(
+        spark,
         out,
         "column_name string, column_type string, min string, max string, "
         "approx_unique long, avg double, std double, q25 double, q50 double, "

@@ -381,6 +381,7 @@ def load(spark, files, opts: dict):
     import glob as _glob
 
     from pg_analytics_spark.sources.base import apply_common
+    from pg_analytics_spark.types import local_relation
 
     paths: list[str] = []
     for pattern in files:
@@ -431,7 +432,7 @@ def load(spark, files, opts: dict):
 
         for rec in records:
             all_rows.append(tuple(_logical(n, rec.get(n)) for n in names))
-    df = spark.createDataFrame(all_rows, ddl)
+    df = local_relation(spark, all_rows, ddl)
     return apply_common(df, opts)
 
 

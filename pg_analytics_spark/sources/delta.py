@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pg_analytics_spark.errors import MissingDependency
 from pg_analytics_spark.sources.base import apply_common
 from pg_analytics_spark.sources.delta_write import _decode_log_path
-from pg_analytics_spark.types import duckdb_type_to_spark
+from pg_analytics_spark.types import duckdb_type_to_spark, local_relation
 
 
 #: Tri-state memo for "is the delta-spark format installed?": None =
@@ -302,7 +302,7 @@ def _load_via_log(
                 for f in fields
             ]
         )
-        return spark.createDataFrame([], schema)
+        return local_relation(spark, [], schema)
 
     with_meta = bool(deletions) or keep_meta
     meta_cols = [
@@ -383,7 +383,7 @@ def _load_via_log(
                 for c in part_cols
             ]
         )
-        pvdf = spark.createDataFrame(pv_rows, pv_schema)
+        pvdf = local_relation(spark, pv_rows, pv_schema)
         df = df.join(F.broadcast(pvdf), "_pv_file")
         for c in part_cols:
             df = df.withColumn(
@@ -436,7 +436,9 @@ def _load_via_log(
                 df = df.withColumn(c, lit)
             out = df if out is None else out.unionByName(df)
     if deletions:
-        dels = spark.createDataFrame(deletions, ["_dv_file", "_dv_pos"])
+        dels = local_relation(
+            spark, deletions, "_dv_file string, _dv_pos bigint"
+        )
         out = out.join(
             F.broadcast(dels), ["_dv_file", "_dv_pos"], "left_anti"
         )

@@ -48,6 +48,7 @@ from pg_analytics_spark.sources.geom import (
     to_wkb,
     to_wkt,
 )
+from pg_analytics_spark.types import local_relation
 
 MAGIC = b"fgb\x03fgb"  # + 1 patch byte (0x00 or 0x01)
 
@@ -350,7 +351,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
     parts.append("geometry_wkt string")
     if keep_wkb:
         parts.append("wkb_geometry binary")
-    df = spark.createDataFrame(rows_out, ", ".join(parts))
+    df = local_relation(spark, rows_out, ", ".join(parts))
     return apply_common(df, opts)
 
 

@@ -37,6 +37,7 @@ from pg_analytics_spark.sources.geom import (
     parse_wkb,
     to_wkt,
 )
+from pg_analytics_spark.types import local_relation
 
 _ENV_DOUBLES = {0: 0, 1: 4, 2: 6, 3: 6, 4: 8}
 
@@ -149,7 +150,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
     schema_parts.append("geometry_wkt string")
     if keep_wkb:
         schema_parts.append("wkb_geometry binary")
-    df = spark.createDataFrame(rows, ", ".join(schema_parts))
+    df = local_relation(spark, rows, ", ".join(schema_parts))
     return apply_common(df, opts)
 
 

@@ -67,6 +67,7 @@ from pg_analytics_spark.sources.iceberg_prune import (
     schema_field_types,
     spec_fields_for,
 )
+from pg_analytics_spark.types import local_relation
 
 
 #: Tri-state memo for "is the iceberg-spark runtime installed?" —
@@ -494,9 +495,13 @@ def _apply_row_deletes(
         part_proj=part_proj,
     )
     if pos_delete_files:
-        dels = spark.read.parquet(*sorted(set(pos_delete_files))).select(
-            _delete_key(F.col("file_path")).alias("_ice_file"),
-            F.col("pos").cast("long").alias("_ice_pos"),
+        dels = (
+            spark.read.schema(POS_DELETE_SCHEMA)
+            .parquet(*sorted(set(pos_delete_files)))
+            .select(
+                _delete_key(F.col("file_path")).alias("_ice_file"),
+                F.col("pos").alias("_ice_pos"),
+            )
         )
         data = data.join(dels, ["_ice_file", "_ice_pos"], "left_anti")
     if dv_entries:
@@ -508,16 +513,18 @@ def _apply_row_deletes(
             for pos in positions
         ]
         if rows:
-            dvdf = spark.createDataFrame(
+            dvdf = local_relation(
+                spark,
                 rows, "_ice_file string, _ice_pos long"
             )
             data = data.join(
                 F.broadcast(dvdf), ["_ice_file", "_ice_pos"], "left_anti"
             )
     if eq_delete_files:
-        seq_map = spark.createDataFrame(
+        seq_map = local_relation(
+            spark,
             [(_delete_key_py(p), s) for p, s in data_files.items()],
-            ["_ice_file", "_ice_seq"],
+            "_ice_file string, _ice_seq bigint",
         )
         data = data.join(F.broadcast(seq_map), "_ice_file", "left")
         for dpath, dseq in sorted(eq_delete_files):
@@ -633,6 +640,39 @@ def _arrow_field_ids(arrow_schema) -> dict[int, str]:
     return out
 
 
+#: Position-delete file columns (spec §position-delete-files): the
+#: fixed read schema spares Spark a footer-inference job per read.
+POS_DELETE_SCHEMA = "file_path string, pos long"
+
+
+def explicit_read_schema(meta: dict, arrow0) -> str | None:
+    """DDL read schema for a table's data files when its metadata pins
+    one: a single schema, every current field primitive, no name
+    mapping, not adopted.  Columns carry the physical names that
+    ``arrow0`` (one data file's footer) resolves by field id, or by name
+    for a file written without ids, typed as the metadata declares;
+    fields the footer lacks are left to _conform_to_schema's typed
+    NULLs.  None: the caller lets Spark infer (one job per read)."""
+    props = meta.get("properties") or {}
+    fields = _current_fields(meta)
+    types = [_ice_to_spark_type(f.get("type")) for f in fields]
+    if (
+        len(meta.get("schemas") or []) > 1
+        or None in types
+        or props.get("adoption.contains-foreign-files") == "true"
+        or props.get("schema.name-mapping.default")
+    ):
+        return None
+    ids = _arrow_field_ids(arrow0)
+    have = {f.name.lower(): f.name for f in arrow0}
+    cols = []
+    for f, t in zip(fields, types):
+        phys = ids.get(f["id"]) if ids else have.get(f["name"].lower())
+        if phys is not None:
+            cols.append(f"`{phys.replace('`', '``')}` {t}")
+    return ", ".join(cols) or None
+
+
 def _conform_to_schema(
     df: DataFrame, meta: dict, id_to_phys: dict[int, str] | None = None
 ) -> DataFrame:
@@ -689,7 +729,9 @@ def _read_conformed(
 ) -> DataFrame:
     """Scan data files conformed to the current table schema.
 
-    Single-schema tables take one reader call.  Tables whose metadata
+    Single-schema tables take one reader call, under
+    :func:`explicit_read_schema` when the metadata pins one (no
+    footer-inference job).  Tables whose metadata
     carries multiple schemas (evolution happened) group files by their
     PHYSICAL parquet schema (a driver-side footer read per file — the
     same order of metadata work the runtime spends on manifests) and
@@ -703,10 +745,14 @@ def _read_conformed(
     see :func:`_project_partition_constants`."""
     multi = len(meta.get("schemas") or []) > 1
 
-    def _scan(ps: list[str], ids: dict[int, str]) -> DataFrame:
+    def _scan(
+        ps: list[str], ids: dict[int, str], schema: str | None = None
+    ) -> DataFrame:
         need_proj = bool(part_proj) and any(p in part_proj for p in ps)
         reader = spark.read
-        if need_proj:
+        if schema:
+            reader = reader.schema(schema)
+        elif need_proj:
             # adopted + native files can share one scan: the unified
             # schema must include columns only the native files carry
             reader = reader.option("mergeSchema", "true")
@@ -733,9 +779,10 @@ def _read_conformed(
         try:
             arrow0 = pq.read_schema(paths[0])
             ids = _arrow_field_ids(arrow0) or _mapped_ids(meta, arrow0)
+            schema = explicit_read_schema(meta, arrow0)
         except Exception:
-            ids = {}
-        return _scan(paths, ids)
+            ids, schema = {}, None
+        return _scan(paths, ids, schema)
 
     groups: dict[tuple, list[str]] = {}
     group_ids: dict[tuple, dict[int, str]] = {}
@@ -807,7 +854,7 @@ def _project_partition_constants(
         tuple([_delete_key_py(p)] + [v.get(c) for c in cols])
         for p, v in sorted(sub.items())
     ]
-    mapdf = spark.createDataFrame(rows, ddl)
+    mapdf = local_relation(spark, rows, ddl)
     out = df.join(F.broadcast(mapdf), "_ice_file", "left")
     for pn, c in zip(proj, cols):
         if c in df.columns:

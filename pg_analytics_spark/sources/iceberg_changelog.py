@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.types import local_relation
 
 
 def iceberg_changelog(
@@ -196,7 +197,8 @@ def iceberg_changelog(
                             if int(p) not in old
                         )
                     if pairs_rows:
-                        dvdf = spark.createDataFrame(
+                        dvdf = local_relation(
+                            spark,
                             pairs_rows, "_ifile string, _ipos long"
                         )
                         pieces.append(
@@ -266,7 +268,7 @@ def iceberg_changelog(
             ", `_change_type` string, `_sequence_number` bigint, "
             "`_snapshot_id` bigint"
         )
-        return spark.createDataFrame([], ddl)
+        return local_relation(spark, [], ddl)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

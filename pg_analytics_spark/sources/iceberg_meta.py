@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.types import local_relation
 
 
 def _meta(path: str) -> dict:
@@ -54,7 +55,8 @@ def iceberg_snapshots(spark: SparkSession, path: str) -> DataFrame:
         for s in meta.get("snapshots", [])
     ]
     rows.sort(key=lambda r: r[2])
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "committed_at_ms long, snapshot_id long, sequence_number long, "
         "operation string, summary string, manifest_list string",
@@ -96,7 +98,8 @@ def iceberg_manifests(spark: SparkSession, path: str) -> DataFrame:
         for m in _current_manifest_list(meta)
     ]
     rows.sort(key=lambda r: (r[4], r[0]))
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "path string, length long, partition_spec_id long, content int, "
         "sequence_number long, added_snapshot_id long",
@@ -138,7 +141,8 @@ def iceberg_files(spark: SparkSession, path: str) -> DataFrame:
                 )
             )
     rows.sort(key=lambda r: (r[7], r[1]))
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "content int, file_path string, file_format string, "
         "spec_id long, partition string, record_count long, "
@@ -181,7 +185,8 @@ def iceberg_refs(spark: SparkSession, path: str) -> DataFrame:
                 ),
             )
         )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "name string, type string, snapshot_id long, "
         "max_reference_age_in_ms long, min_snapshots_to_keep long, "

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.types import local_relation
 
 MAGIC = b"PFA1"
 BLOB_TYPE_KMV = "pg-analytics-kmv-v1"
@@ -317,7 +318,8 @@ def iceberg_statistics(spark: SparkSession, path: str) -> DataFrame:
                     entry["statistics-path"],
                 )
             )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "snapshot_id long, column string, field_id int, blob_type string, "
         "ndv double, k int, n_in_sketch int, statistics_path string",

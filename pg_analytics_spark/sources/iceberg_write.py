@@ -54,6 +54,11 @@ from pyspark.sql import DataFrame
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.avro import read_container, write_container
 from pg_analytics_spark.sources.delta_write import _truthy_opt
+from pg_analytics_spark.sources.iceberg import (
+    POS_DELETE_SCHEMA,
+    explicit_read_schema,
+)
+from pg_analytics_spark.types import local_relation
 
 #: Spark typeName → Iceberg primitive type (inverse of the reader map)
 _SPARK_TO_ICE = {
@@ -1902,6 +1907,19 @@ def _adoption_projection(meta, manifest_list_entries) -> dict | None:
     return out or None
 
 
+def _target_reader(spark, meta: dict, paths: list[str]):
+    """Reader for a single-schema DML target scan: the explicit schema
+    the table's metadata pins (sources/iceberg.explicit_read_schema —
+    no inference job), else mergeSchema inference over every footer."""
+    import pyarrow.parquet as pq
+
+    first = paths[0][5:] if paths[0].startswith("file:") else paths[0]
+    schema = explicit_read_schema(meta, pq.read_schema(first))
+    if schema:
+        return spark.read.schema(schema)
+    return spark.read.option("mergeSchema", "true")
+
+
 def _visible_target(
     spark, data_seq, pos_deletes, eq_deletes, meta=None, part_proj=None,
     dv_entries=None,
@@ -1922,9 +1940,8 @@ def _visible_target(
     if meta is not None and len(meta.get("schemas") or []) > 1:
         tgt = _dml_scan_conformed(spark, sorted(data_seq), meta)
     else:
-        tgt = spark.read.option("mergeSchema", "true").parquet(
-            *sorted(data_seq)
-        ).select(
+        paths = sorted(data_seq)
+        tgt = _target_reader(spark, meta or {}, paths).parquet(*paths).select(
             "*",
             F.regexp_replace(
                 F.col("_metadata.file_path"), "^file:/+", "/"
@@ -1961,7 +1978,7 @@ def _visible_target(
             tuple([os.path.abspath(p)] + [v.get(c) for c in cols])
             for p, v in sorted(part_proj.items())
         ]
-        mapdf = spark.createDataFrame(rows, ddl)
+        mapdf = local_relation(spark, rows, ddl)
         have = set(tgt.columns)
         tgt = tgt.join(F.broadcast(mapdf), "_ifile", "left")
         for pn, c in zip(proj, cols):
@@ -1971,11 +1988,15 @@ def _visible_target(
                 tgt = tgt.withColumn(c, F.col(pn))
         tgt = tgt.drop(*proj)
     if pos_deletes:
-        prior = spark.read.parquet(*sorted(set(pos_deletes))).select(
-            F.regexp_replace(F.col("file_path"), "^file:/+", "/").alias(
-                "_ifile"
-            ),
-            F.col("pos").cast("long").alias("_ipos"),
+        prior = (
+            spark.read.schema(POS_DELETE_SCHEMA)
+            .parquet(*sorted(set(pos_deletes)))
+            .select(
+                F.regexp_replace(F.col("file_path"), "^file:/+", "/").alias(
+                    "_ifile"
+                ),
+                F.col("pos").alias("_ipos"),
+            )
         )
         tgt = tgt.join(prior, ["_ifile", "_ipos"], "left_anti")
     if dv_entries:
@@ -1991,19 +2012,20 @@ def _visible_target(
             for p in positions
         ]
         if rows:
-            dvdf = spark.createDataFrame(rows, "_ifile string, _ipos long")
+            dvdf = local_relation(spark, rows, "_ifile string, _ipos long")
             tgt = tgt.join(
                 F.broadcast(dvdf), ["_ifile", "_ipos"], "left_anti"
             )
     if eq_deletes:
         from pg_analytics_spark.sources.iceberg import _delete_key_py
 
-        seq_map = spark.createDataFrame(
+        seq_map = local_relation(
+            spark,
             [
                 (_delete_key_py(os.path.abspath(p)), s)
                 for p, s in data_seq.items()
             ],
-            ["_ik", "_iseq"],
+            "_ik string, _iseq bigint",
         )
         key_expr = F.regexp_replace(F.col("_ifile"), r"^.*/(?=data/)", "")
         tgt = tgt.withColumn("_ik", key_expr).join(
@@ -2562,7 +2584,8 @@ def compact_iceberg(spark, path: str) -> dict:
     if pos_delete_paths:
         affected_keys |= {
             _delete_key_py(r["file_path"])
-            for r in spark.read.parquet(*sorted(set(pos_delete_paths)))
+            for r in spark.read.schema(POS_DELETE_SCHEMA)
+            .parquet(*sorted(set(pos_delete_paths)))
             .select("file_path")
             .distinct()
             .collect()
@@ -2642,7 +2665,8 @@ def compact_iceberg(spark, path: str) -> dict:
             part_proj=_adoption_projection(prev_meta, prev_list),
         )
         key_expr = F.regexp_replace(F.col("_ifile"), r"^.*/(?=data/)", "")
-        idx_map = spark.createDataFrame(
+        idx_map = local_relation(
+            spark,
             [(k, i) for k, i in idx_of.items()], "_k string, _pt int"
         )
         staged = (
@@ -3890,7 +3914,8 @@ def rewrite_data_files_iceberg(
             meta=prev_meta,
             part_proj=part_proj,
         )
-        bin_map = spark.createDataFrame(
+        bin_map = local_relation(
+            spark,
             [(os.path.abspath(p), i) for p, i in sorted(selected.items())],
             "_ifile string, _bin int",
         )
@@ -5157,9 +5182,8 @@ def merge_iceberg(
                     data_paths.append(rec["file_path"])
 
     if data_paths:
-        tgt = spark.read.option("mergeSchema", "true").parquet(
-            *sorted(data_paths)
-        ).select(
+        paths = sorted(data_paths)
+        tgt = _target_reader(spark, prev_meta, paths).parquet(*paths).select(
             *colnames,
             F.regexp_replace(
                 F.col("_metadata.file_path"), "^file:/+", "/"
@@ -5167,13 +5191,13 @@ def merge_iceberg(
             F.col("_metadata.row_index").cast("long").alias("_ipos"),
         )
         if existing_pos_deletes:
-            prior = spark.read.parquet(
+            prior = spark.read.schema(POS_DELETE_SCHEMA).parquet(
                 *sorted(set(existing_pos_deletes))
             ).select(
                 F.regexp_replace(F.col("file_path"), "^file:/+", "/").alias(
                     "_ifile"
                 ),
-                F.col("pos").cast("long").alias("_ipos"),
+                F.col("pos").alias("_ipos"),
             )
             tgt = tgt.join(prior, ["_ifile", "_ipos"], "left_anti")
     else:
@@ -5188,7 +5212,7 @@ def merge_iceberg(
                 )
             sch = sch.add(f["name"], t)
         tgt = (
-            spark.createDataFrame([], sch)
+            local_relation(spark, [], sch)
             .withColumn("_ifile", F.lit(""))
             .withColumn("_ipos", F.lit(0).cast("long"))
         )

@@ -44,6 +44,7 @@ from pg_analytics_spark.sources.geom import (
     to_wkb,
     to_wkt,
 )
+from pg_analytics_spark.types import local_relation
 
 
 def _local(tag: str) -> str:
@@ -217,7 +218,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
     parts.append("geometry_wkt string")
     if keep_wkb:
         parts.append("wkb_geometry binary")
-    df = spark.createDataFrame(rows, ", ".join(parts))
+    df = local_relation(spark, rows, ", ".join(parts))
     return apply_common(df, opts)
 
 

@@ -45,6 +45,7 @@ from pg_analytics_spark.sources.geom import (
     to_wkb,
     to_wkt,
 )
+from pg_analytics_spark.types import local_relation
 
 _SHAPE_NULL = 0
 _SHAPE_POINT = 1
@@ -219,7 +220,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
     schema_parts.append("geometry_wkt string")
     if keep_wkb:
         schema_parts.append("wkb_geometry binary")
-    df = spark.createDataFrame(all_rows, ", ".join(schema_parts))
+    df = local_relation(spark, all_rows, ", ".join(schema_parts))
     return apply_common(df, opts)
 
 

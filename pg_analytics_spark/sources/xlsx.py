@@ -24,9 +24,11 @@ import zipfile
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.base import _truthy, apply_common
+from pg_analytics_spark.types import local_relation
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = (
@@ -171,6 +173,17 @@ def _parse_rows(zf, sheet_xml, shared, date_styles, all_varchar):
     return rows
 
 
+#: parsed cell value type → Spark column type (PySpark's inference
+#: rule for the same Python values)
+_CELL_TYPES = {
+    bool: T.BooleanType(),
+    int: T.LongType(),
+    float: T.DoubleType(),
+    str: T.StringType(),
+    dt.date: T.DateType(),
+}
+
+
 def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
     if len(files) != 1:
         raise UnsupportedFormat("xlsx source takes exactly one file")
@@ -196,9 +209,16 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
     else:
         names = [f"col{i}" for i in range(width)]
     # unify column types: mixed int/float → float; anything mixed with
-    # string → string (spreadsheets are schemaless by nature)
+    # string → string (spreadsheets are schemaless by nature); an
+    # all-empty column reads as string
+    types = []
     for i in range(width):
         kinds = {type(r[i]) for r in rows if r[i] is not None}
+        types.append(
+            _CELL_TYPES[next(iter(kinds))] if len(kinds) == 1
+            else T.DoubleType() if kinds == {int, float}
+            else T.StringType()
+        )
         if kinds == {int, float}:
             for r in rows:
                 if r[i] is not None:
@@ -214,8 +234,9 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
                         if isinstance(v, bool)
                         else str(v)
                     )
-    df = spark.createDataFrame(
+    df = local_relation(
+        spark,
         [tuple(r) for r in rows] or [tuple([None] * width)],
-        schema=names,
+        T.StructType([T.StructField(n, t) for n, t in zip(names, types)]),
     )
     return apply_common(df, opts)

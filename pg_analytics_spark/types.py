@@ -11,13 +11,16 @@ pair is a native ``cast``; what remains is:
 2. the permissive-numeric-cast rule: a declared numeric column accepts
    any numeric physical type via silent cast (cell.rs:754-757);
    non-numeric mismatches raise DataTypeMismatch (cell.rs:1404-1417).
+
+``local_relation`` is the one constructor for relations the driver
+builds from Python values (Arrow-backed, see its docstring).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -104,6 +107,45 @@ def duckdb_type_to_spark(name: str) -> T.DataType:
         return _DUCKDB_TO_SPARK[n]
     # Fall back to Spark's own DDL parser (covers struct<...>, array<...>, map<...>)
     return T.DataType.fromDDL(n)
+
+
+def local_relation(
+    spark: SparkSession, rows, schema: str | T.StructType
+) -> DataFrame:
+    """A DataFrame over driver-side Python ``rows`` (tuples in field
+    order, or dicts by field name) under ``schema`` (DDL or StructType).
+
+    Built from a ``pyarrow.Table`` so Spark plans a LocalRelation; a
+    plain ``createDataFrame(list, …)`` is a pickled Python RDD whose
+    first action launches a Spark job through Python workers.  Values
+    of TIMESTAMP (session-zone) columns go in as UTC instants, so naive
+    datetimes keep PySpark's list rule: wall-clock times of the Python
+    process's zone."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema
+        if isinstance(schema, T.StructType)
+        else T._parse_datatype_string(schema)
+    )
+    names = struct.names
+    rows = [
+        tuple(r.get(n) for n in names) if isinstance(r, dict) else r
+        for r in rows
+    ]
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
+    for c, f in zip(cols, struct.fields):
+        if isinstance(f.dataType, T.TimestampType):
+            c[:] = [v and v.astimezone(dt.timezone.utc) for v in c]
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def is_numeric(dt: T.DataType) -> bool:
